@@ -1,6 +1,7 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import graft.sources.EventLog
 import graft.operators.{EventSourcing, StreamOps}
 
@@ -9,27 +10,39 @@ import graft.operators.{EventSourcing, StreamOps}
   * directory, with space and segment handles underneath
   * (`docs/concepts.md` hierarchy: store → space → segment → entry).
   *
-  * Every method returns a lazy DataFrame — the facade only composes
-  * operators; Catalyst sees the whole plan and optimizes across the
-  * facade boundary. */
+  * Every read filters ONE canonical entry view, [[entries]]. Over the
+  * raw layout that view is [[graft.sources.EventLog.sequenced]]:
+  * sequences are derived once per snapshot of `events.parquet` and the
+  * result is persisted (MEMORY_AND_DISK), so a consume, peek, tail,
+  * listing, status or replay is a filter plus operators over a cached
+  * frame — no schema inference, no scan of the log, no window per
+  * call. Validity: each call re-lists the input files (name, length,
+  * mtime); when the listing changes, the old generation is unpersisted
+  * and the view derived again, so a handle always answers from the
+  * current files. Memory: one cached copy of the whole log per
+  * (session, directory), shared by every handle on it. For a log too
+  * large to hold, use [[GraftStore.fromProduced]]: the produced layout
+  * materializes sequences at write time, caches nothing and prunes
+  * space/segment predicates to partitions.
+  *
+  * Methods return lazy DataFrames, so Catalyst optimizes the caller's
+  * operators together with the facade's. */
 class GraftStore(spark: SparkSession, dir: String) {
-  /** Canonical entry view (space, segment, sequence, ts_us, value,
-    * payload). */
-  def entries: DataFrame = EventLog.entries(spark, dir)
+  /** Canonical entry view (space, segment, sequence, ts_us, event_id,
+    * value, payload). */
+  def entries: DataFrame = EventLog.sequenced(spark, dir)
 
-  private[api] def named: DataFrame = EventLog.named(spark, dir)
-
-  /** Pruned entry view — raw-column predicates reach the parquet scan
-    * and the sequence window only sees the touched segments. */
+  /** The entry view narrowed to one space and/or segment. */
   private[api] def entriesFor(space: Option[String],
       segment: Option[String] = None): DataFrame =
-    EventLog.entries(spark, dir, space, segment)
+    entries.filter((space.map(col("space") === _) ++
+      segment.map(col("segment") === _)).foldLeft(lit(true))(_ && _))
 
   /** GetSpaces. */
-  def spaces: DataFrame = StreamOps.getSpaces(named)
+  def spaces: DataFrame = StreamOps.getSpaces(entries)
 
   /** GetStatus. */
-  def status: DataFrame = StreamOps.storeStatus(named)
+  def status: DataFrame = StreamOps.storeStatus(entries)
 
   /** Consume across spaces from per-space offsets. */
   def consume(offsets: Map[String, (String, Long)],
@@ -49,7 +62,7 @@ class GraftStore(spark: SparkSession, dir: String) {
   /** Space-watermark late-arrival audit
     * (`server/space_watermarks.go` dual). */
   def watermarkAudit(toleranceUs: Long): DataFrame =
-    StreamOps.watermarkAudit(named, toleranceUs)
+    StreamOps.watermarkAudit(entries, toleranceUs)
 
   def space(name: String): GraftSpace = new GraftSpace(this, name)
 }
@@ -63,24 +76,14 @@ object GraftStore {
     * space/segment predicates prune partitions directly. */
   def fromProduced(spark: SparkSession, path: String): GraftStore =
     new GraftStore(spark, path) {
-      override def entries: org.apache.spark.sql.DataFrame =
+      override def entries: DataFrame =
         graft.sources.EventLogWriter.readProduced(spark, path)
-      override private[api] def entriesFor(space: Option[String],
-          segment: Option[String]): org.apache.spark.sql.DataFrame = {
-        import org.apache.spark.sql.functions.col
-        var df = entries
-        space.foreach(sp => df = df.filter(col("space") === sp))
-        segment.foreach(sg => df = df.filter(col("segment") === sg))
-        df
-      }
-      override private[api] def named: org.apache.spark.sql.DataFrame =
-        entries
     }
 }
 
 /** Space handle: ConsumeSpace / GetSegments / subscriptions' batch dual. */
 class GraftSpace(store: GraftStore, val name: String) {
-  def segments: DataFrame = StreamOps.getSegments(store.named, name)
+  def segments: DataFrame = StreamOps.getSegments(store.entries, name)
 
   def consume(minTsUs: Option[Long] = None, maxTsUs: Option[Long] = None,
       limit: Option[Int] = None): DataFrame =
@@ -132,9 +135,7 @@ class GraftSegment(store: GraftStore, val space: String, val segment: String) {
     StreamOps.consumeSegment(store.entriesFor(Some(space), Some(segment)),
       space, segment, minSeq, maxSeq, minTsUs, maxTsUs, limit)
 
-  def peek: DataFrame = {
-    import org.apache.spark.sql.functions.col
+  def peek: DataFrame =
     StreamOps.peek(store.entriesFor(Some(space), Some(segment)), space)
       .filter(col("segment") === segment)
-  }
 }

@@ -1,9 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import graft.sources.{EventLog, EventLogWriter}
-import graft.operators.StreamOps
+import graft.operators.{Par, StreamOps}
 
 /** Asserted plan invariants: the scale-critical properties §5 claims —
   * pushdown, broadcast joins, partial aggregation, window-free produced
@@ -50,6 +53,61 @@ class PlanSpec extends SparkSpec {
     val p = plan(StreamOps.peek(
       EventLog.entries(spark, SF, Some("signup")), "signup"))
     assert(p.contains("max_by") || p.contains("partial"), p)
+  }
+
+  /** Physical operators of an executed query, outside any cached
+    * relation (InMemoryTableScan's inner plan is the one-time derivation,
+    * not this query's work). */
+  private val aqe = new AdaptiveSparkPlanHelper {}
+
+  private def executedNodes(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    aqe.collect(df.queryExecution.executedPlan) { case n => n }
+  }
+
+  test("sequenced view over a tiny log: segment consume, peek and tail run with no Exchange and no Window") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.window.WindowExec
+    val dir = Files.createTempDirectory("graft_plan_seqd").toString
+    spark.read.parquet(s"$SF/events.parquet").write.parquet(s"$dir/events.parquet")
+    val store = graft.api.GraftStore(spark, dir)
+    val (sp, sg) = {
+      val r = store.entries.select("space", "segment").head
+      (r.getString(0), r.getString(1))
+    }
+    for ((what, df) <- Seq(
+        "consume" -> store.space(sp).segment(sg).consume(),
+        "consume(limit)" -> store.space(sp).segment(sg)
+          .consume(minSeq = Some(2L), limit = Some(3)),
+        "peek" -> store.space(sp).segment(sg).peek,
+        "tail" -> store.space(sp).tail(2))) {
+      val nodes = executedNodes(df)
+      assert(nodes.exists(_.nodeName == "InMemoryTableScan"), s"$what: $nodes")
+      assert(!nodes.exists(_.isInstanceOf[Exchange]), s"$what: $nodes")
+      assert(!nodes.exists(_.isInstanceOf[WindowExec]), s"$what: $nodes")
+    }
+  }
+
+  test("sequenced layout: tiny input is one partition, larger input keeps the (space, segment) clustering") {
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, SinglePartition}
+    // the decision is Par's absolute tiny bound on the input listing
+    assert(Par.isTiny(1, 0L) && Par.isTiny(Par.MaxFiles, Par.TinyBytes - 1))
+    assert(!Par.isTiny(1, Par.TinyBytes) && !Par.isTiny(Par.MaxFiles + 1, 1L))
+    def partitioning(df: DataFrame) =
+      aqe.stripAQEPlan(df.queryExecution.executedPlan).outputPartitioning
+    val derived = EventLog.entries(spark, SF)
+    val one = EventLog.clustered(derived, tiny = true)
+    assert(partitioning(one) === SinglePartition)
+    val big = EventLog.clustered(derived, tiny = false)
+    partitioning(big) match {
+      case h: HashPartitioning =>
+        assert(h.expressions.map(_.references.head.name) === Seq("space", "segment"))
+      case other => fail(s"expected (space, segment) hash clustering, got $other")
+    }
+    // both layouts hold the same rows, sorted within each partition
+    val key = Seq("space", "segment", "sequence")
+    assert(one.collect().toSeq.map(_.toSeq) ===
+      big.orderBy(key.map(col): _*).collect().toSeq.map(_.toSeq))
   }
 
   test("produced layout read needs no window to recover sequences") {

@@ -1,9 +1,10 @@
 #!/bin/bash
 # usage: ab_bench.sh <filter> <runs> <tag>
 F="$1"; N="${2:-2}"; TAG="${3:-ab}"
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 cd /root/repo
 for i in $(seq 1 $N); do
-  SPARK_GRAFT_BENCH_FILTER="$F" SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_BENCH_FILTER="$F" SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS="$CPUS" \
     SPARK_GRAFT_BENCH_OUT=/tmp/ab_${TAG}_$i.json \
     sbt -batch 'runMain graft.Bench' >/dev/null 2>&1
   echo "run $i: $(head -c 200 /tmp/ab_${TAG}_$i.json)"

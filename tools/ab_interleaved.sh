@@ -9,6 +9,7 @@
 # a trap restores the working tree even if a compile/bench step dies.
 set -e
 F="$1"; N="${2:-2}"
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 cd /root/repo
 STASHED=0
 restore() {
@@ -19,20 +20,25 @@ restore() {
 trap restore EXIT
 # run one side: runA <round> | runB <round>
 runA() {
-  if git stash push -q -u -m "ab_interleaved_$1" 2>/dev/null \
-      && [ -n "$(git stash list | grep ab_interleaved_$1)" ]; then
+  # our stash exists iff the top entry changed across the push (a name
+  # grep would also match a stale entry, and `_1` matches `_10`)
+  local before after
+  before="$(git rev-parse -q --verify 'stash@{0}' || true)"
+  git stash push -q -u -m "ab_interleaved_$1" 2>/dev/null || true
+  after="$(git rev-parse -q --verify 'stash@{0}' || true)"
+  if [ -n "$after" ] && [ "$after" != "$before" ]; then
     STASHED=1
   fi
   sbt compile -batch >/dev/null 2>&1
   SPARK_GRAFT_BENCH_FILTER="$F" SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-    SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_OUT="/tmp/abx_A_$1.json" \
+    SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_BENCH_OUT="/tmp/abx_A_$1.json" \
     sbt -batch 'runMain graft.Bench' >/dev/null 2>&1 || true
   restore
 }
 runB() {
   sbt compile -batch >/dev/null 2>&1
   SPARK_GRAFT_BENCH_FILTER="$F" SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
-    SPARK_GRAFT_CPUS=32 SPARK_GRAFT_BENCH_OUT="/tmp/abx_B_$1.json" \
+    SPARK_GRAFT_CPUS="$CPUS" SPARK_GRAFT_BENCH_OUT="/tmp/abx_B_$1.json" \
     sbt -batch 'runMain graft.Bench' >/dev/null 2>&1 || true
 }
 for round in $(seq 1 "$N"); do
