@@ -19,11 +19,14 @@ import graft.operators.{EventSourcing, StreamOps}
   * call. Validity: each call re-lists the input files (name, length,
   * mtime); when the listing changes, the old generation is unpersisted
   * and the view derived again, so a handle always answers from the
-  * current files. Memory: one cached copy of the whole log per
-  * (session, directory), shared by every handle on it. For a log too
-  * large to hold, use [[GraftStore.fromProduced]]: the produced layout
-  * materializes sequences at write time, caches nothing and prunes
-  * space/segment predicates to partitions.
+  * current files. Cost: the first read, and the first read after each
+  * change, derives sequences for the whole log, not just the touched
+  * segments. Memory: one cached copy of the whole log per (session,
+  * directory), shared by every handle on it, held until [[release]] or
+  * until the SparkContext stops. For a log too large to hold, use
+  * [[GraftStore.fromProduced]]: the produced layout materializes
+  * sequences at write time, caches nothing and prunes space/segment
+  * predicates to partitions.
   *
   * Methods return lazy DataFrames, so Catalyst optimizes the caller's
   * operators together with the facade's. */
@@ -31,6 +34,11 @@ class GraftStore(spark: SparkSession, dir: String) {
   /** Canonical entry view (space, segment, sequence, ts_us, event_id,
     * value, payload). */
   def entries: DataFrame = EventLog.sequenced(spark, dir)
+
+  /** Drops the cached view of this directory for every handle on it
+    * ([[graft.sources.EventLog.release]]); the next read derives it
+    * again. A no-op over the produced layout, which caches nothing. */
+  def release(): Unit = EventLog.release(spark, dir)
 
   /** The entry view narrowed to one space and/or segment. */
   private[api] def entriesFor(space: Option[String],

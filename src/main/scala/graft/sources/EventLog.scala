@@ -34,9 +34,14 @@ import graft.operators.Par
   *  - [[sequenced]] derives them once per snapshot of the input files
   *    and keeps the result persisted (MEMORY_AND_DISK), so a server
   *    answering many small reads (GraftStore) filters one cached frame.
-  *    It holds one copy of the whole log per (session, directory) —
-  *    for a log too large to cache, read the produced layout instead
+  *    It holds one copy of the whole log per (session, directory)
+  *    until [[release]] or until the SparkContext stops — for a log too
+  *    large to cache, read the produced layout instead
   *    (`GraftStore.fromProduced`), which needs no derivation at all.
+  *    The first read, and the first read after any change to the
+  *    input, pays for a window over the whole log rather than over the
+  *    touched segments: a one-shot reader is better served by
+  *    [[entries]].
   */
 object EventLog {
 
@@ -123,6 +128,7 @@ object EventLog {
   private final class Generation {
     var token: Seq[(String, Long, Long)] = Nil
     var view: DataFrame = null
+    var released = false
   }
 
   private val generations =
@@ -157,28 +163,58 @@ object EventLog {
     * differs, the old generation is unpersisted and the view derived
     * again — never more than one live generation per directory. The
     * derivation is materialized here, under the generation's lock, so
-    * callers only ever filter a cached frame. */
+    * callers only ever filter a cached frame.
+    *
+    * The cached copy lives until [[release]] or until the SparkContext
+    * stops; the memo also keeps `spark` reachable until then. */
   def sequenced(spark: SparkSession, dir: String): DataFrame = {
     generations.keySet.removeIf(_._1.sparkContext.isStopped)
     val gen = generations.computeIfAbsent((spark, dir), _ => new Generation)
-    val token = snapshot(spark, dir)
-    gen.synchronized {
-      if (gen.view == null || gen.token != token) {
-        if (gen.view != null) gen.view.unpersist(blocking = false)
-        gen.view = null
-        val view = clustered(entries(spark, dir),
-          Par.isTiny(token.size, token.map(_._2).sum))
-        // Spark matches cached plans by input path, not snapshot: drop a
-        // generation another session of this context cached for `dir`,
-        // or persist would adopt its (possibly stale) data
-        view.unpersist(blocking = false)
-        view.persist(StorageLevel.MEMORY_AND_DISK).count()
-        gen.token = token
-        gen.view = view
+    val seen = snapshot(spark, dir)
+    val view = gen.synchronized {
+      if (gen.released) null
+      else if (gen.view != null && gen.token == seen) gen.view
+      else {
+        // re-list under the lock: `seen` may predate a generation another
+        // reader derived while this one waited, and the recorded token
+        // must never be older than the files the view was built from
+        val token = snapshot(spark, dir)
+        if (gen.view == null || gen.token != token) {
+          if (gen.view != null) gen.view.unpersist(blocking = false)
+          gen.view = null
+          val derived = clustered(entries(spark, dir),
+            Par.isTiny(token.size, token.map(_._2).sum))
+          // Spark matches cached plans by input path, not snapshot: drop a
+          // generation another session of this context cached for `dir`,
+          // or persist would adopt its (possibly stale) data
+          derived.unpersist(blocking = false)
+          derived.persist(StorageLevel.MEMORY_AND_DISK).count()
+          gen.token = token
+          gen.view = derived
+        }
+        gen.view
       }
-      gen.view
     }
+    // released while this call waited: start over on a fresh generation
+    if (view == null) sequenced(spark, dir) else view
   }
+
+  /** Drops `dir`'s cached view for `spark`: unpersists it and forgets the
+    * generation, so nothing of it stays reachable from the memo. The next
+    * [[sequenced]] call derives the view again. Frames already handed out
+    * stay valid but read from the files again. Returns whether a cached
+    * view was held. */
+  def release(spark: SparkSession, dir: String): Boolean =
+    Option(generations.remove((spark, dir))).exists { gen =>
+      gen.synchronized {
+        gen.released = true
+        val held = gen.view != null
+        if (held) gen.view.unpersist(blocking = false)
+        gen.view = null
+        gen.token = Nil
+        held
+      }
+    }
 
   /** The persisted layout of the sequenced view, sorted by (space,
     * segment, sequence) within each partition. A tiny input (Par's

@@ -288,6 +288,28 @@ class ApiSpec extends SparkSpec {
     assert(views.forall(_ eq views.head))
   }
 
+  test("release drops a directory's cached view and the next read derives it again") {
+    val dir = Files.createTempDirectory("graft_memo_release").toString
+    spark.read.parquet(s"$SF/events.parquet").write.parquet(s"$dir/events.parquet")
+    val h = GraftStore(spark, dir)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val first = h.entries
+    val n = first.count()
+    val cached = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(cached.nonEmpty)
+
+    h.release()
+    assert(spark.sparkContext.getPersistentRDDs.keySet.intersect(cached).isEmpty)
+    assert(!EventLog.release(spark, dir)) // nothing is held any more
+    assert(first.count() == n) // a frame handed out earlier still reads
+
+    val again = h.entries
+    assert(!(again eq first))
+    assert(h.entries eq again)
+    assert(again.count() == n)
+    assert(EventLog.release(spark, dir))
+  }
+
   test("catalog views make the whole surface SQL-reachable") {
     graft.api.GraftCatalog.registerViews(spark, SF)
     val n = spark.sql(
